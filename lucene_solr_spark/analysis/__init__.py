@@ -6,5 +6,6 @@ from .text import (  # noqa: F401
     tokenize_series,
     analyze_series,
     analyze_one,
+    analyze_many,
 )
 from .stem import porter_stem, english_filter_terms  # noqa: F401

@@ -1179,5 +1179,21 @@ def analyze_series(texts: pd.Series, analyzer: str = "standard") -> pd.Series:
 
 def analyze_one(text: str, analyzer: str = "standard") -> list[tuple[str, int]]:
     """Single-string convenience: [(term, position), ...]."""
-    flat = tokenize_series(pd.Series([text]), analyzer=analyzer)
-    return list(zip(flat["term"].tolist(), flat["pos"].tolist()))
+    return analyze_many([text], analyzer=analyzer)[0]
+
+
+def analyze_many(
+    texts: list[str], analyzer: str = "standard"
+) -> list[list[tuple[str, int]]]:
+    """``analyze_one`` over many strings in ONE ``tokenize_series`` call:
+    one row per string, so each string's tokens and positions are exactly
+    its own (the chain is per-document), while the fixed per-call cost of
+    the Arrow kernels is paid once for the whole batch."""
+    out: list[list[tuple[str, int]]] = [[] for _ in texts]
+    if not out:
+        return out
+    flat = tokenize_series(pd.Series(list(texts), dtype=object), analyzer=analyzer)
+    for d, t, p in zip(flat["doc_idx"].tolist(), flat["term"].tolist(),
+                       flat["pos"].tolist()):
+        out[d].append((t, p))
+    return out

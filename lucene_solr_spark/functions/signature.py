@@ -222,9 +222,18 @@ SIGNATURE_FNS = {
 
 def signature_column(docs, method: str = "text_profile",
                      text_col: str = "text", id_col: str = "doc_id"):
-    """(doc_id, signature) via Arrow-batched mapInPandas."""
+    """(doc_id, signature): md5 is Spark's own ``md5`` over the UTF-8
+    bytes (codegen, no Python); the other methods run Arrow-batched
+    mapInPandas."""
     import pandas as pd
+    from pyspark.sql import functions as F
 
+    if method == "md5":
+        return docs.select(
+            F.col(id_col).cast("long").alias("doc_id"),
+            F.md5(F.encode(F.coalesce(F.col(text_col), F.lit("")), "utf-8"))
+            .alias("signature"),
+        )
     fn = SIGNATURE_FNS[method]
 
     def run(batches):

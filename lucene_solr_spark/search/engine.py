@@ -36,6 +36,8 @@ from __future__ import annotations
 import functools
 import hashlib
 import os
+import threading
+from collections import OrderedDict
 
 import numpy as np
 import pandas as pd
@@ -116,33 +118,36 @@ def _read_field_norms(
 
 
 class _Row:
-    """Decoded-on-demand postings row for one (segment, term)."""
+    """Decoded-on-demand postings row for one (segment, term). The full
+    decode and the decoded positions are kept with the row once made.
+    ``owner`` is the resident reader holding the row: it is told their
+    bytes, which count against the readers' byte budget."""
 
     __slots__ = ("df", "blocks", "positions", "skip_last", "skip_off",
-                 "skip_pos_off", "skip_max_tf", "skip_max_norm", "_full")
+                 "skip_max_tf", "skip_max_norm", "_full", "_pos", "_owner")
 
-    def __init__(self, r: pd.Series):
-        self.df = int(r["df"])
-        self.blocks = r["blocks"]
+    def __init__(self, df, blocks, skip_last, skip_off, skip_max_tf,
+                 skip_max_norm, positions=b"", owner=None):
+        self.df = int(df)
+        self.blocks = blocks
         # positions are column-pruned out of the scan for position-free
         # queries (the .doc/.pos file split of the reference codec)
-        self.positions = r["positions"] if "positions" in r else b""
-        self.skip_last = np.asarray(r["skip_last"], dtype=np.int64)
-        self.skip_off = np.asarray(r["skip_off"], dtype=np.int64)
-        self.skip_pos_off = (
-            np.asarray(r["skip_pos_off"], dtype=np.int64)
-            if "skip_pos_off" in r
-            else np.zeros(0, np.int64)
-        )
-        self.skip_max_tf = np.asarray(r["skip_max_tf"], dtype=np.int64)
-        self.skip_max_norm = np.asarray(r["skip_max_norm"], dtype=np.int64)
+        self.positions = positions
+        self.skip_last = np.asarray(skip_last, dtype=np.int64)
+        self.skip_off = np.asarray(skip_off, dtype=np.int64)
+        self.skip_max_tf = np.asarray(skip_max_tf, dtype=np.int64)
+        self.skip_max_norm = np.asarray(skip_max_norm, dtype=np.int64)
         self._full = None
+        self._pos = None
+        self._owner = owner
 
     def decode_all(self) -> tuple[np.ndarray, np.ndarray]:
         if self._full is None:
             self._full = codec.decode_blocks(
                 self.blocks, self.df, self.skip_off, self.skip_last
             )
+            if self._owner is not None:
+                self._owner.grow(self._full[0].nbytes + self._full[1].nbytes)
         return self._full
 
     def lookup(self, ids: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -150,11 +155,13 @@ class _Row:
 
         Skip-list path: only blocks that can contain a candidate are decoded
         (the DocIdSetIterator.advance analog, Lucene41PostingsReader.java:474-510).
+        A resident row decodes fully instead: it keeps the decode, and later
+        queries look it up without decoding again.
         """
         if len(ids) == 0:
             return ids, np.zeros(0, np.int64)
-        if self._full is not None:
-            d, t = self._full
+        if self._full is not None or self._owner is not None:
+            d, t = self.decode_all()
         else:
             nblocks = len(self.skip_last)
             bids = np.searchsorted(self.skip_last, ids, side="left")
@@ -182,42 +189,32 @@ class _Row:
         """Flat positions for sorted candidate ids (all present in this row).
 
         Returns (counts, flat): counts[j] = tf of ids[j], flat = their
-        positions concatenated doc-major. Vectorized per BLOCK (decode the
-        block's whole position stream once, gather the selected docs'
-        slices with a segmented arange) — no per-doc Python loop
-        (ExactPhraseScorer.java:137-177 restated batch-wise)."""
-        bids = np.searchsorted(self.skip_last, ids, side="left")
-        counts = np.empty(len(ids), dtype=np.int64)
-        parts: list[np.ndarray] = []
-        for b in np.unique(bids):
-            d, t = codec.decode_blocks(
-                self.blocks, self.df, self.skip_off, self.skip_last, np.array([b])
-            )
-            total = int(t.sum())
-            deltas = codec.varint_decode(
-                self.positions, count=total, offset=int(self.skip_pos_off[b])
-            )
-            ends = np.cumsum(t)
-            starts = ends - t
-            reset = np.zeros(total, dtype=np.int64)
-            reset[starts] = 1
-            grp = np.cumsum(reset) - 1
+        positions concatenated doc-major, gathered with a segmented arange
+        from the row's whole position stream, decoded once and kept with
+        the row (ExactPhraseScorer.java:137-177 restated batch-wise)."""
+        d, t = self.decode_all()
+        abs_pos, starts = self._all_positions()
+        idx = np.searchsorted(d, ids)
+        counts = t[idx]
+        tot = int(counts.sum())
+        base = np.repeat(starts[idx], counts)
+        within = np.arange(tot) - np.repeat(np.cumsum(counts) - counts, counts)
+        return counts, abs_pos[base + within]
+
+    def _all_positions(self) -> tuple[np.ndarray, np.ndarray]:
+        """(absolute positions of every doc, doc-major; each doc's start in
+        them). The stream stores per-doc position deltas, block after
+        block with no gaps, so one varint pass decodes all of it."""
+        if self._pos is None:
+            _, t = self.decode_all()
+            deltas = codec.varint_decode(self.positions, count=int(t.sum()))
+            starts = np.cumsum(t) - t
             c = np.cumsum(deltas)
-            abs_pos = c - (c[starts] - deltas[starts])[grp]
-            m = bids == b
-            sel = ids[m]
-            idx = np.searchsorted(d, sel)
-            sel_counts = t[idx]
-            counts[m] = sel_counts
-            tot_sel = int(sel_counts.sum())
-            if tot_sel:
-                base = np.repeat(starts[idx], sel_counts)
-                within = np.arange(tot_sel) - np.repeat(
-                    np.cumsum(sel_counts) - sel_counts, sel_counts
-                )
-                parts.append(abs_pos[base + within])
-        flat = np.concatenate(parts) if parts else np.zeros(0, np.int64)
-        return counts, flat
+            first = c[starts] - deltas[starts]  # running sum before each doc
+            self._pos = (c - np.repeat(first, t), starts)
+            if self._owner is not None:
+                self._owner.grow(self._pos[0].nbytes + starts.nbytes)
+        return self._pos
 
     def positions_for(self, ids: np.ndarray) -> list[np.ndarray]:
         """Per-candidate position arrays (ids sorted, all present)."""
@@ -225,8 +222,22 @@ class _Row:
         return np.split(flat, np.cumsum(counts)[:-1])
 
 
+def _rows_from_pdf(pdf: pd.DataFrame) -> dict[str, _Row]:
+    """term -> _Row over one segment's postings rows (a Spark group's pdf)."""
+    n = len(pdf)
+    return {
+        t: _Row(*a)
+        for t, *a in zip(
+            pdf["term"].tolist(), pdf["df"].tolist(), pdf["blocks"].tolist(),
+            pdf["skip_last"].tolist(), pdf["skip_off"].tolist(),
+            pdf["skip_max_tf"].tolist(), pdf["skip_max_norm"].tolist(),
+            pdf["positions"].tolist() if "positions" in pdf else [b""] * n,
+        )
+    }
+
+
 def _score_segment(
-    pdf: pd.DataFrame,
+    postings: pd.DataFrame | tuple[str, dict[str, _Row]],
     q: Query,
     seg_meta: dict,
     wv_by_clause: list,
@@ -239,13 +250,18 @@ def _score_segment(
     fqq: Query | None = None,
     all_hits: bool = False,
     fset_bc=None,
-) -> pd.DataFrame:
-    seg_name = pdf["segment_id"].iloc[0]
+) -> tuple[np.ndarray, np.ndarray]:
+    """One segment's partial top-k as (global docids, float32 scores).
+    ``postings`` is the Spark group's pdf (one segment's rows of the query
+    terms) or, on the resident path, (segment name, term -> _Row)."""
+    if isinstance(postings, pd.DataFrame):
+        seg_name = postings["segment_id"].iloc[0]
+        rows = _rows_from_pdf(postings)
+    else:
+        seg_name, rows = postings
     meta = seg_meta[seg_name]
     norms = _read_norms(meta["dir"])
     doc_base = meta["doc_base"]
-
-    rows = {t: _Row(r) for t, r in ((r["term"], r) for _, r in pdf.iterrows())}
 
     clauses = q.clauses
     required_idx = [i for i, c in enumerate(clauses) if c.required]
@@ -259,7 +275,7 @@ def _score_segment(
     if fqq is not None:
         fset = _filter_docset(fqq, rows, meta["max_doc"])
         if len(fset) == 0:
-            return _empty_pdf()
+            return _no_hits()
     if fset_bc is not None:
         # filterCache path: slice this segment's range out of the cached
         # GLOBAL docid set (sorted), rebase to local ids
@@ -272,18 +288,18 @@ def _score_segment(
             else fset[np.isin(fset, local, assume_unique=True)]
         )
         if len(fset) == 0:
-            return _empty_pdf()
+            return _no_hits()
 
     # ---- required-clause intersection (rarest-first leapfrog) ----
     if required_idx:
         for i in required_idx:
             c = clauses[i]
             if c.kind == "term" and c.terms[0] not in rows:
-                return _empty_pdf()
+                return _no_hits()
             if c.kind == "phrase" and not _phrase_present(c, rows):
-                return _empty_pdf()
+                return _no_hits()
             if c.kind == "term_set" and not any(t in rows for t in c.terms):
-                return _empty_pdf()
+                return _no_hits()
         term_req = [i for i in required_idx if clauses[i].kind == "term"]
         set_req = [i for i in required_idx if clauses[i].kind == "term_set"]
         bool_req = [i for i in required_idx if clauses[i].kind == "bool"]
@@ -296,13 +312,13 @@ def _score_segment(
             if fset is not None:
                 cand_ids = cand_ids[np.isin(cand_ids, fset, assume_unique=True)]
                 if len(cand_ids) == 0:
-                    return _empty_pdf()
+                    return _no_hits()
             for i in order[1:]:
                 r = rows[clauses[i].terms[0]]
                 _, tfs = r.lookup(cand_ids)
                 cand_ids = cand_ids[tfs > 0]
                 if len(cand_ids) == 0:
-                    return _empty_pdf()
+                    return _no_hits()
         for i in set_req:
             # required multi-term expansion: doc must contain ANY set term
             # (ConstantScore doc-set intersected into the conjunction)
@@ -312,7 +328,7 @@ def _score_segment(
             else:
                 cand_ids = cand_ids[np.isin(cand_ids, union, assume_unique=True)]
             if len(cand_ids) == 0:
-                return _empty_pdf()
+                return _no_hits()
         for i in bool_req:
             # required nested group: intersect its boolean doc-set
             sub_set = _filter_docset(clauses[i].sub, rows, meta["max_doc"])
@@ -321,16 +337,16 @@ def _score_segment(
             else:
                 cand_ids = cand_ids[np.isin(cand_ids, sub_set, assume_unique=True)]
             if len(cand_ids) == 0:
-                return _empty_pdf()
+                return _no_hits()
         for i in phrase_req:
             ids_p, _f = _phrase_freqs(clauses[i], rows, cand_ids)
             cand_ids = ids_p
             if len(cand_ids) == 0:
-                return _empty_pdf()
+                return _no_hits()
         if cand_ids is not None and fset is not None:
             cand_ids = cand_ids[np.isin(cand_ids, fset, assume_unique=True)]
             if len(cand_ids) == 0:
-                return _empty_pdf()
+                return _no_hits()
 
     # ---- pure-OR candidate generation with exact MaxScore pruning ----
     lookup_only: set[int] = set()
@@ -344,7 +360,7 @@ def _score_segment(
             or c.kind == "bool"  # nested: evaluated via its doc-set
         ]
         if not present:
-            return _empty_pdf()
+            return _no_hits()
         ubs = {}
         for i in present:
             c = clauses[i]
@@ -430,7 +446,7 @@ def _score_segment(
         cand_ids = acc_ids
 
     if len(cand_ids) == 0:
-        return _empty_pdf()
+        return _no_hits()
 
     # ---- prohibited clauses (ReqExclScorer semantics) ----
     for t in q.must_not:
@@ -439,7 +455,7 @@ def _score_segment(
             _, tfs = r.lookup(cand_ids)
             cand_ids = cand_ids[tfs == 0]
             if len(cand_ids) == 0:
-                return _empty_pdf()
+                return _no_hits()
 
     # ---- exact rescore in original clause order (float32 rank identity) ----
     n = len(cand_ids)
@@ -513,23 +529,12 @@ def _score_segment(
         m = (total < a_s) | ((total == a_s) & (cand_ids + doc_base > a_d))
         cand_ids, total = cand_ids[m], total[m]
     if count_only:
-        return pd.DataFrame(
-            {"docid": np.array([-1], np.int64),
-             "score": np.array([len(cand_ids)], np.float32)}
-        )
-    if len(cand_ids) == 0:
-        return _empty_pdf()
+        return np.array([-1], np.int64), np.array([len(cand_ids)], np.float32)
     if all_hits:
         # full DocSet (SolrIndexSearcher.getDocSet): every match, doc order
-        return pd.DataFrame(
-            {"docid": (cand_ids + doc_base).astype(np.int64),
-             "score": total.astype(np.float32)}
-        )
+        return (cand_ids + doc_base).astype(np.int64), total.astype(np.float32)
     sel = np.lexsort((cand_ids, -total))[:k]
-    return pd.DataFrame(
-        {"docid": (cand_ids[sel] + doc_base).astype(np.int64),
-         "score": total[sel].astype(np.float32)}
-    )
+    return (cand_ids[sel] + doc_base).astype(np.int64), total[sel].astype(np.float32)
 
 
 def _filter_docset(fqq: Query, rows: dict, max_doc: int) -> np.ndarray:
@@ -984,6 +989,128 @@ def _empty_pdf() -> pd.DataFrame:
     return pd.DataFrame({"docid": np.zeros(0, np.int64), "score": np.zeros(0, np.float32)})
 
 
+def _no_hits() -> tuple[np.ndarray, np.ndarray]:
+    return np.zeros(0, np.int64), np.zeros(0, np.float32)
+
+
+# ---------------------------------------------------------------------------
+# resident segment readers: the embedded path's open SegmentReaders
+# ---------------------------------------------------------------------------
+
+# Byte budget of all resident readers of the process together: the Arrow
+# buffers of the held postings columns plus every full decode a row keeps.
+# Least recently used readers go first once it is exceeded.
+RESIDENT_READER_BYTES = 64 << 20
+
+_POSTINGS_COLS = ["term", "df", "blocks", "skip_last", "skip_off",
+                  "skip_max_tf", "skip_max_norm"]
+
+
+def _arrow_column(series: pd.Series):
+    """The Arrow array behind an Arrow-backed pandas column, in one chunk."""
+    import pyarrow as pa
+
+    a = pa.array(series.array)
+    return a.combine_chunks() if isinstance(a, pa.ChunkedArray) else a
+
+
+class _SegmentReader:
+    """One published segment's postings.parquet, read once and held as
+    Arrow columns (no per-term Python objects). A term's row is found once
+    (``slots``) and its _Row built once, then kept with its full decode.
+    The positions column is loaded the first time a query needs it.
+
+    Readers are shared by every searcher of the process and keyed by the
+    file's identity (path, inode, mtime, size). A published segment is
+    immutable, so a key never sees other bytes: an index rebuilt at the
+    same path writes new files, whose new identity misses the cache, and
+    the old entry ages out of the LRU. Unchanged segments stay warm across
+    NRT reopens, as Lucene's openIfChanged shares unchanged SegmentReaders.
+    """
+
+    def __init__(self, pdf: pd.DataFrame):
+        self.cols = {c: _arrow_column(pdf[c]) for c in pdf.columns}
+        self.terms = self.cols["term"]
+        self.df = self.cols["df"].to_numpy()
+        self.has_pos = "positions" in pdf.columns
+        self._slot: dict[str, int] = {}  # term -> row, -1 if absent
+        self.rows: dict[str, _Row] = {}
+        self.nbytes = sum(c.nbytes for c in self.cols.values())
+        self._lock = threading.Lock()
+
+    def slots(self, terms: list[str]) -> list[int]:
+        new = [t for t in terms if t not in self._slot]
+        if new:
+            import pyarrow as pa
+            import pyarrow.compute as pc
+
+            found = pc.index_in(pa.array(new, pa.string()),
+                                value_set=self.terms).to_pylist()
+            for t, i in zip(new, found):
+                self._slot[t] = -1 if i is None else i
+            self.grow(128 * len(new))
+        return [self._slot[t] for t in terms]
+
+    def grow(self, n: int) -> None:
+        """Count ``n`` more bytes held for this segment."""
+        with self._lock:
+            self.nbytes += n
+
+    def df_of(self, terms: list[str]) -> list[int]:
+        return [0 if i < 0 else int(self.df[i]) for i in self.slots(terms)]
+
+    def add_positions(self, read) -> None:
+        """Load the positions column (``read()`` returns the segment's rows
+        with it) and give every row built so far its positions."""
+        with self._lock:
+            if self.has_pos:
+                return
+            pos = self.cols["positions"] = _arrow_column(read()["positions"])
+            self.nbytes += pos.nbytes
+            for t, r in self.rows.items():
+                r.positions = pos[self._slot[t]].as_buffer()
+            self.has_pos = True
+
+    def rows_for(self, terms: list[str]) -> dict[str, _Row]:
+        out = {}
+        for t, i in zip(terms, self.slots(terms)):
+            if i >= 0:
+                out[t] = self.rows.get(t) or self._build_row(t, i)
+        return out
+
+    def _build_row(self, term: str, i: int) -> _Row:
+        # under the lock, so add_positions never misses a row being built
+        with self._lock:
+            r = self.rows.get(term)
+            if r is not None:
+                return r
+            c = self.cols
+            r = _Row(
+                self.df[i], c["blocks"][i].as_buffer(),
+                *(c[k][i].values.to_numpy() for k in (
+                    "skip_last", "skip_off", "skip_max_tf", "skip_max_norm")),
+                owner=self,
+            )
+            if self.has_pos:
+                r.positions = c["positions"][i].as_buffer()
+            self.nbytes += 256 + 32 * len(r.skip_off)  # the row's own arrays
+            self.rows[term] = r
+            return r
+
+
+_READERS: OrderedDict = OrderedDict()
+_READERS_LOCK = threading.Lock()
+
+
+def _trim_readers() -> None:
+    """Evict least recently used readers down to RESIDENT_READER_BYTES
+    (the most recent one always stays)."""
+    with _READERS_LOCK:
+        total = sum(r.nbytes for r in _READERS.values())
+        while total > RESIDENT_READER_BYTES and len(_READERS) > 1:
+            total -= _READERS.popitem(last=False)[1].nbytes
+
+
 class SparkSearcher:
     """Searcher over a manifest snapshot.
 
@@ -1180,10 +1307,11 @@ class SparkSearcher:
         aft, cnt, fqc, allh, fbc = after, _count_only, fqq, _all_hits, fq_docids
 
         def run(key, pdf):
-            return _score_segment(
+            docid, score = _score_segment(
                 pdf, qq, seg_meta, wv, idfs, cch, kk, pr, aft, cnt, fqc, allh,
                 fbc,
             )
+            return pd.DataFrame({"docid": docid, "score": score})
 
         # stage 2: per-segment partial top-k (parallel leaves, mergeable state)
         partial = prows.groupBy("segment_id").applyInPandas(run, RESULT_SCHEMA)
@@ -1962,7 +2090,7 @@ class SparkSearcher:
             # repeated terms, unordered: sequential sweep with repeat
             # reconciliation (NearSpansUnordered "with repeats" semantics)
             doc_base = seg_meta[pdf["segment_id"].iloc[0]]["doc_base"]
-            rows = {t: _Row(r) for t, r in ((r["term"], r) for _, r in pdf.iterrows())}
+            rows = _rows_from_pdf(pdf)
             if any(t not in rows for t in tlist):
                 return pd.DataFrame({"docid": np.zeros(0, np.int64),
                                      "freq": np.zeros(0, np.int64)})
@@ -2007,7 +2135,7 @@ class SparkSearcher:
 
         def run(key, pdf):
             doc_base = seg_meta[pdf["segment_id"].iloc[0]]["doc_base"]
-            rows = {r["term"]: _Row(r) for _, r in pdf.iterrows()}
+            rows = _rows_from_pdf(pdf)
             posmap = _span_posmap(node, rows)
             gs, _ge, _w = SP.eval_spans(node, posmap)
             d, c = SP.span_doc_counts(gs)
@@ -2043,7 +2171,7 @@ class SparkSearcher:
         def run(key, pdf):
             seg = seg_meta[pdf["segment_id"].iloc[0]]
             doc_base = seg["doc_base"]
-            rows = {r["term"]: _Row(r) for _, r in pdf.iterrows()}
+            rows = _rows_from_pdf(pdf)
             posmap = _span_posmap(node, rows)
             gs, _ge, w = SP.eval_spans(node, posmap)
             d, freqs = SP.span_doc_sloppy_freqs(gs, w, seg["max_doc"])
@@ -2074,43 +2202,48 @@ class SparkSearcher:
     # resident (embedded) search path — the warm-serving mode
     # ------------------------------------------------------------------
 
-    def _read_seg_postings(
-        self, seg_dir: str, terms: list[str], need_pos: bool
-    ) -> pd.DataFrame:
-        """One segment's postings rows for the given terms, via a direct
-        pyarrow read (term-in filter prunes row groups exactly like the
-        Spark scan's PushedFilters)."""
+    def _read_seg_postings(self, seg_dir: str, need_pos: bool) -> pd.DataFrame:
+        """One segment's whole postings.parquet, the positions column only
+        with ``need_pos``, as Arrow-backed pandas (no per-row objects): the
+        one read a resident reader makes of its segment."""
         import pyarrow.parquet as pq
 
-        cols = [
-            "segment_id", "term", "df", "ttf", "blocks", "skip_last",
-            "skip_off", "skip_max_tf", "skip_max_norm",
-        ]
-        if need_pos:
-            cols += ["positions", "skip_pos_off"]
         t = pq.read_table(
             os.path.join(seg_dir, "postings.parquet"),
-            columns=cols,
-            filters=[("term", "in", terms)],
+            columns=_POSTINGS_COLS + (["positions"] if need_pos else []),
         )
-        return t.to_pandas()
+        return t.to_pandas(types_mapper=pd.ArrowDtype, use_threads=False)
+
+    def _segment_reader(self, seg_dir: str, need_pos: bool = False) -> _SegmentReader:
+        """The process-wide resident reader of one segment, opened on first
+        touch (see _SegmentReader for why its key needs no invalidation)."""
+        path = os.path.join(seg_dir, "postings.parquet")
+        st = os.stat(path)
+        key = (path, st.st_ino, st.st_mtime_ns, st.st_size)
+        with _READERS_LOCK:
+            rd = _READERS.get(key)
+            if rd is not None:
+                _READERS.move_to_end(key)
+        if rd is None:
+            rd = _SegmentReader(self._read_seg_postings(seg_dir, need_pos))
+            with _READERS_LOCK:
+                _READERS[key] = rd
+            _trim_readers()
+        if need_pos and not rd.has_pos:
+            rd.add_positions(lambda: self._read_seg_postings(seg_dir, True))
+        return rd
 
     def _dictionary_resident(self) -> np.ndarray:
         """Sorted default-field terms dictionary, cached for the searcher's
-        lifetime (driver-side single-column parquet reads — the FST term
+        lifetime, from the resident readers' term indexes (the FST term
         index held hot, the embedded-mode analog of BlockTree in RAM)."""
         if self._resident_dict is None:
-            import pyarrow.parquet as pq
-
             from ..index.build import FIELD_SEP
 
-            parts = []
-            for m in self.seg_meta.values():
-                t = pq.read_table(
-                    os.path.join(m["dir"], "postings.parquet"),
-                    columns=["term"],
-                )
-                parts.append(t["term"].to_numpy(zero_copy_only=False))
+            parts = [
+                self._segment_reader(m["dir"]).terms.to_numpy(zero_copy_only=False)
+                for m in self.seg_meta.values()
+            ]
             allt = np.unique(np.concatenate(parts)) if parts else np.zeros(0, object)
             mask = np.char.find(allt.astype(str), FIELD_SEP) < 0
             self._resident_dict = allt[mask]
@@ -2165,23 +2298,14 @@ class SparkSearcher:
         return out[:max_expansions]
 
     def _term_stats_resident(self, terms: list[str]) -> dict[str, int]:
-        """Global df per term without a Spark job (driver-side pruned
-        parquet reads), sharing the searcher-lifetime stats cache."""
-        import pyarrow.parquet as pq
-
+        """Global df per term without a Spark job: df sums over the
+        resident readers, sharing the searcher-lifetime stats cache."""
         missing = [t for t in terms if t not in self._stats_cache]
         if missing:
-            got: dict[str, int] = {}
+            total = np.zeros(len(missing), np.int64)
             for m in self.seg_meta.values():
-                t = pq.read_table(
-                    os.path.join(m["dir"], "postings.parquet"),
-                    columns=["term", "df"],
-                    filters=[("term", "in", missing)],
-                )
-                for term, df_ in zip(t["term"].to_pylist(), t["df"].to_pylist()):
-                    got[term] = got.get(term, 0) + int(df_)
-            for t_ in missing:
-                self._stats_cache[t_] = got.get(t_, 0)
+                total += self._segment_reader(m["dir"]).df_of(missing)
+            self._stats_cache.update(zip(missing, total.tolist()))
         return {t_: self._stats_cache[t_] for t_ in terms}
 
     def search_resident(
@@ -2196,16 +2320,17 @@ class SparkSearcher:
         prune: bool = True,
         with_url: bool = False,
     ) -> pd.DataFrame:
-        """Embedded single-node execution of the SAME query semantics: the
-        per-segment kernels (_score_segment) run driver-side over pyarrow
-        reads in a thread pool — zero Spark jobs on the hot path, results
-        bit-identical to search(). This is the Lucene-embedded serving mode
-        beside the Solr-distributed one: Spark carries the build and
-        cold/large-scale queries, the resident searcher serves repeated
-        interactive queries at in-process latency (the ROADMAP
-        'resident searcher' item)."""
-        from concurrent.futures import ThreadPoolExecutor
-
+        """Embedded single-node execution of the SAME query semantics, with
+        zero Spark jobs and results bit-identical to search(): the
+        per-segment kernel (_score_segment) runs driver-side, segment after
+        segment, over the process-wide resident readers. A warm query reads
+        no parquet at all: each segment's postings file was read once, each
+        (segment, term) row was built once and keeps its full decode, and
+        the query text's analysis is memoized (query.analyze_memo). This is
+        the Lucene-embedded serving mode beside the Solr-distributed one:
+        Spark carries the build and cold/large-scale queries, the resident
+        searcher serves repeated interactive queries at in-process latency.
+        """
         q = (parse_query(query, mode, analyzer=self.analyzer)
              if isinstance(query, str) else query)
         if min_should_match:
@@ -2235,6 +2360,13 @@ class SparkSearcher:
         terms = sorted(
             set(q.all_terms) | (set(fqq.all_terms) if fqq is not None else set())
         )
+        need_pos = _query_has(q, ("phrase",)) or (
+            fqq is not None and _query_has(fqq, ("phrase",))
+        )
+        # open (or find) every segment's reader first: the stats below and
+        # the scoring loop are then served from memory
+        readers = {name: self._segment_reader(m["dir"], need_pos)
+                   for name, m in self.seg_meta.items()}
         stats = self._term_stats_resident(terms)
         idf_by_term = {
             t: bm25.idf(stats.get(t, 0), self.max_doc) for t in terms
@@ -2249,36 +2381,29 @@ class SparkSearcher:
                         return _resident_empty(with_url)
                 elif any(stats.get(t, 0) == 0 for t in c.terms):
                     return _resident_empty(with_url)
-        need_pos = _query_has(q, ("phrase",)) or (
-            fqq is not None and _query_has(fqq, ("phrase",))
-        )
 
-        def run_seg(seg_dir):
-            pdf = self._read_seg_postings(seg_dir, terms, need_pos)
-            if pdf.empty:
-                return _empty_pdf()
-            return _score_segment(
-                pdf, q, self.seg_meta, wv_by_clause, idf_by_term, cache, k,
-                prune, after, False, fqq, False, None,
-            )
-
-        dirs = [m["dir"] for m in self.seg_meta.values()]
-        if len(dirs) > 1:
-            with ThreadPoolExecutor(min(8, len(dirs))) as ex:
-                parts = list(ex.map(run_seg, dirs))
-        else:
-            parts = [run_seg(dirs[0])]
-        allr = pd.concat(parts, ignore_index=True)
-        if len(allr) == 0:
+        # serially: a warm segment scores in about a millisecond, less than
+        # a thread pool's own cost
+        hits = []
+        for name, rd in readers.items():
+            rows = rd.rows_for(terms)
+            if rows:
+                hits.append(_score_segment(
+                    (name, rows), q, self.seg_meta, wv_by_clause, idf_by_term,
+                    cache, k, prune, after, False, fqq, False, None,
+                ))
+        _trim_readers()  # full decodes made by this query count too
+        if not hits:
             return _resident_empty(with_url)
-        allr = allr.sort_values(
-            ["score", "docid"], ascending=[False, True], kind="mergesort"
-        ).head(k).reset_index(drop=True)
-        allr["rank"] = np.arange(1, len(allr) + 1, dtype=np.int32)
+        docid = np.concatenate([d for d, _ in hits])
+        score = np.concatenate([s_ for _, s_ in hits])
+        sel = np.lexsort((docid, -score))[:k]
+        out = {"rank": np.arange(1, len(sel) + 1, dtype=np.int32),
+               "docid": docid[sel]}
         if with_url:
-            allr["url"] = [self._resident_url(int(d)) for d in allr["docid"]]
-            return allr[["rank", "docid", "url", "score"]]
-        return allr[["rank", "docid", "score"]]
+            out["url"] = [self._resident_url(int(d)) for d in out["docid"]]
+        out["score"] = score[sel]
+        return pd.DataFrame(out)
 
     def _resident_url(self, docid: int) -> str:
         import pyarrow.parquet as pq
@@ -2382,7 +2507,7 @@ class SparkSearcher:
             "skip_max_tf", "skip_max_norm",
         ]
         if pf:
-            cols += ["positions", "skip_pos_off"]
+            cols += ["positions"]
         prows = self._postings.where(F.col("term").isin(all_ns)).select(*cols)
         seg_meta = self.seg_meta
         tlist, flist, tie_f, kk = terms, fields, np.float32(tie), k
@@ -2390,7 +2515,7 @@ class SparkSearcher:
 
         def run(key, pdf):
             seg = seg_meta[pdf["segment_id"].iloc[0]]
-            rows = {r["term"]: _Row(r) for _, r in pdf.iterrows()}
+            rows = _rows_from_pdf(pdf)
             if not rows:
                 return _empty_pdf()
             cand = np.unique(
@@ -2495,11 +2620,8 @@ class SparkSearcher:
 
 
 def _explain_segment(searcher: "SparkSearcher", q: Query, docid: int) -> dict:
-    """Driver-side explain: read the one segment holding ``docid`` with
-    pyarrow, decode the query terms' postings, reproduce the scoring."""
-    import pyarrow.parquet as pq
-    import pyarrow.compute as pac
-
+    """Driver-side explain: the query terms' rows of the one segment
+    holding ``docid``, from its resident reader, reproduce the scoring."""
     seg = None
     for name, m in searcher.seg_meta.items():
         if m["doc_base"] <= docid < m["doc_base"] + m["max_doc"]:
@@ -2519,11 +2641,8 @@ def _explain_segment(searcher: "SparkSearcher", q: Query, docid: int) -> dict:
         bm25.avg_field_length(searcher.sum_ttf, searcher.max_doc)
     )
 
-    tbl = pq.read_table(
-        os.path.join(seg["dir"], "postings.parquet"),
-        filters=pac.field("term").isin(terms),
-    ).to_pandas()
-    rows = {r["term"]: _Row(r) for _, r in tbl.iterrows()}
+    rows = searcher._segment_reader(
+        seg["dir"], _query_has(q, ("phrase",))).rows_for(terms)
     lid = np.array([local], dtype=np.int64)
 
     wv_all = _weights_for(q, idf_by_term)

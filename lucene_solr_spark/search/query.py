@@ -15,9 +15,11 @@ search/IndexSearcher.java:516-522, here trivially single-pass):
 from __future__ import annotations
 
 import re
+import threading
+from collections import OrderedDict
 from dataclasses import dataclass, field
 
-from ..analysis import analyze_one
+from ..analysis import analyze_many
 
 
 @dataclass
@@ -104,13 +106,51 @@ def parse_query(text: str, mode: str = "OR", analyzer: str = "standard") -> Quer
     inner terms instead.
     """
     tokens = _TOKENIZER.findall(text)
-    q, _boost, _i = _parse_group(tokens, 0, mode, analyzer, depth=0)
+    # pass 1 collects every string the parse analyzes (an analyzer that
+    # keeps each string whole drives every branch that analyzes more);
+    # they are analyzed together, then pass 2 parses on the results
+    wanted: list[str] = []
+    _parse_group(tokens, 0, mode, lambda s: wanted.append(s) or [(s, 0)], 0)
+    q, _boost, _i = _parse_group(
+        tokens, 0, mode, analyze_memo(wanted, analyzer).__getitem__, 0)
     return q
 
 
+# Process-wide memo of query-side analysis, (analyzer, text) -> tokens.
+# Analysis is a pure function of the text and of module constants (the
+# chains, stop sets and stemmer tables never change at run time), so an
+# entry never goes stale and needs no invalidation; the entry count is
+# bounded, least recently used first out.
+ANALYSIS_MEMO_ENTRIES = 8192
+_MEMO: OrderedDict = OrderedDict()
+_MEMO_LOCK = threading.Lock()
+
+
+def analyze_memo(texts: list[str], analyzer: str) -> dict[str, tuple]:
+    """text -> ((term, position), ...) for every text; the ones not in the
+    memo are analyzed in one batched ``analyze_many`` call."""
+    out: dict[str, tuple] = {}
+    with _MEMO_LOCK:
+        for t in texts:
+            hit = _MEMO.get((analyzer, t))
+            if hit is not None:
+                _MEMO.move_to_end((analyzer, t))
+                out[t] = hit
+    missing = [t for t in dict.fromkeys(texts) if t not in out]
+    if missing:
+        fresh = analyze_many(missing, analyzer=analyzer)
+        with _MEMO_LOCK:
+            for t, toks in zip(missing, fresh):
+                out[t] = _MEMO[(analyzer, t)] = tuple(toks)
+            while len(_MEMO) > ANALYSIS_MEMO_ENTRIES:
+                _MEMO.popitem(last=False)
+    return out
+
+
 def _parse_group(
-    tokens: list[str], i: int, mode: str, analyzer: str, depth: int
+    tokens: list[str], i: int, mode: str, analyze, depth: int
 ) -> tuple[Query, float, int]:
+    """``analyze(text)`` returns the text's analyzed (term, position)s."""
     required_default = mode.upper() == "AND"
     clauses: list[Clause] = []
     must_not: list[str] = []
@@ -128,7 +168,7 @@ def _parse_group(
                 i,
             )
         if tok in ("(", "+("):
-            sub, gboost, i = _parse_group(tokens, i + 1, mode, analyzer, depth + 1)
+            sub, gboost, i = _parse_group(tokens, i + 1, mode, analyze, depth + 1)
             if sub.clauses or sub.must_not or sub.must_not_patterns:
                 clauses.append(
                     Clause(
@@ -159,7 +199,7 @@ def _parse_group(
                 for word in phrase.split():
                     alts_here: list[str] = []
                     for alt in word.split("|"):
-                        t = analyze_one(alt, analyzer=analyzer)
+                        t = analyze(alt)
                         if t:
                             alts_here.append(t[0][0])
                     if not alts_here:
@@ -186,7 +226,7 @@ def _parse_group(
                         )
                     )
                 continue
-            toks = analyze_one(phrase, analyzer=analyzer)
+            toks = analyze(phrase)
             if not toks:
                 continue
             if len(toks) == 1:
@@ -266,7 +306,7 @@ def _parse_group(
                                fuzzy_edits=edits)
                     )
                 continue
-            toks = analyze_one(word, analyzer=analyzer)
+            toks = analyze(word)
             if not toks:
                 continue
             for t, _ in toks:

@@ -9,6 +9,31 @@ os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "8g")
 CACHE = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".cache")
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers",
+        "reference_oracle: differential test against the compiled reference "
+        "(tools/fuzz_*.py); skipped without the reference sources or a JDK",
+    )
+
+
+def _reference_oracle_available() -> bool:
+    try:
+        import tools.fuzz_chain as fc
+    except ImportError:
+        return False
+    return bool(os.path.isdir(fc.REF) and shutil.which("javac")
+                and shutil.which("java"))
+
+
+def pytest_collection_modifyitems(config, items):
+    marked = [it for it in items if "reference_oracle" in it.keywords]
+    if marked and not _reference_oracle_available():
+        skip = pytest.mark.skip(reason="reference sources or JDK unavailable")
+        for it in marked:
+            it.add_marker(skip)
+
+
 @pytest.fixture(scope="session")
 def spark():
     from lucene_solr_spark.session import get_spark

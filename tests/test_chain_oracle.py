@@ -7,19 +7,13 @@ per-language sample that runs in CI.
 """
 from __future__ import annotations
 
-import os
 import random
-import shutil
 
 import pytest
 
 import tools.fuzz_chain as fc
 
-pytestmark = pytest.mark.skipif(
-    not (os.path.isdir(fc.REF) and shutil.which("javac")
-         and shutil.which("java")),
-    reason="reference sources or JDK unavailable",
-)
+pytestmark = pytest.mark.reference_oracle
 
 N_LINES = 25
 

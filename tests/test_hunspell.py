@@ -4,7 +4,6 @@ the reference's own hunspell/Dictionary.java + Stemmer.java and
 compares stem lists; the full sweep — all 31 fixture dictionaries x
 case-sensitive/ignore-case, 6390 comparisons — passed 0 mismatches)."""
 
-import shutil
 import subprocess
 import sys
 
@@ -73,10 +72,7 @@ def test_analyzer_chain_twins():
     assert toks == [("order", 0), ("ord", 0), ("by", 1), ("valu", 2)]
 
 
-@pytest.mark.skipif(
-    shutil.which("javac") is None or shutil.which("java") is None,
-    reason="no JDK for the reference oracle",
-)
+@pytest.mark.reference_oracle
 def test_fixture_subset_matches_compiled_reference():
     proc = subprocess.run(
         [sys.executable, "tools/fuzz_hunspell.py",

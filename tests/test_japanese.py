@@ -9,7 +9,6 @@ The JapaneseTokenizer itself is environment-blocked: the reference
 checkout ships kuromoji without TokenInfoDictionary$buffer.dat, so its
 own JapaneseAnalyzer cannot start (analysis/japanese.py docstring)."""
 
-import shutil
 import subprocess
 import sys
 
@@ -68,10 +67,7 @@ def test_cjk_ja_analyzer():
         ("こゝ", 0), ("ゝろ", 1)]
 
 
-@pytest.mark.skipif(
-    shutil.which("javac") is None or shutil.which("java") is None,
-    reason="no JDK for the reference oracle",
-)
+@pytest.mark.reference_oracle
 def test_fuzz_subset_matches_compiled_reference():
     proc = subprocess.run(
         [sys.executable, "tools/fuzz_ja.py", "250"],

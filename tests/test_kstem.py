@@ -3,7 +3,6 @@ compiled en/KStemmer (tools/fuzz_kstem.py; the 15k-word campaign —
 lexicon words, suffixed derivations, doubled consonants, randoms —
 passed byte-identical on the first run)."""
 
-import shutil
 import subprocess
 import sys
 
@@ -48,10 +47,7 @@ def test_analyzer_chain():
     assert toks == [("consultation", 1), ("define", 3), ("policy", 4)]
 
 
-@pytest.mark.skipif(
-    shutil.which("javac") is None or shutil.which("java") is None,
-    reason="no JDK for the reference oracle",
-)
+@pytest.mark.reference_oracle
 def test_fuzz_subset_matches_compiled_reference():
     proc = subprocess.run(
         [sys.executable, "tools/fuzz_kstem.py", "400"],

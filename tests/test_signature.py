@@ -3,7 +3,6 @@ subset vs the compiled MD5/Lookup3/TextProfileSignature
 (tools/fuzz_signature.py; the 5k-line campaign passed byte-identical,
 including the Java-HashMap tie order inside the text profile)."""
 
-import shutil
 import subprocess
 import sys
 
@@ -66,10 +65,7 @@ def test_lookup3_length_mod3_quirk():
     assert lookup3ycs64("abcd") != lookup3ycs64("abce")
 
 
-@pytest.mark.skipif(
-    shutil.which("javac") is None or shutil.which("java") is None,
-    reason="no JDK for the reference oracle",
-)
+@pytest.mark.reference_oracle
 def test_fuzz_subset_matches_compiled_reference():
     proc = subprocess.run(
         [sys.executable, "tools/fuzz_signature.py", "300"],
@@ -77,3 +73,20 @@ def test_fuzz_subset_matches_compiled_reference():
     )
     assert proc.returncode == 0, proc.stdout + proc.stderr
     assert "OK" in proc.stdout, proc.stdout
+
+
+def test_md5_signature_column_is_spark_md5_of_utf8(spark):
+    """signature_column(method="md5") runs Spark's md5 over the UTF-8
+    bytes: equal to the Python md5_signature per row, a null text hashing
+    as the empty string."""
+    from lucene_solr_spark.functions.signature import signature_column
+
+    texts = ["The quick brown fox", "", None, "naïve café İstanbul ΣΊΣΥΦΟΣ",
+             "東京タワー 🙂", "line\nbreak\ttab"]
+    docs = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "doc_id int, text string")
+    sig = signature_column(docs, method="md5")
+    assert sig.schema.simpleString() == "struct<doc_id:bigint,signature:string>"
+    got = {r["doc_id"]: r["signature"] for r in sig.collect()}
+    assert got == {i: md5_signature(t if t is not None else "")
+                   for i, t in enumerate(texts)}

@@ -1,21 +1,18 @@
 """Differential parity: every Python Snowball stemmer vs the REFERENCE
 generated Java programs, compiled from /root/reference and driven over
-stdin (tools/fuzz_snowball.py). Skipped when no JDK is available.
+stdin (tools/fuzz_snowball.py). Skipped without the reference sources
+or a JDK.
 
 The full campaign (6000 words x 17 languages, seed 20260817) passed
 byte-identical during round 4; this test keeps a smaller always-on
 sample so regressions in any stemmer or shared helper are caught."""
 
-import shutil
 import subprocess
 import sys
 
 import pytest
 
-pytestmark = pytest.mark.skipif(
-    shutil.which("javac") is None or shutil.which("java") is None,
-    reason="no JDK for the reference oracle",
-)
+pytestmark = pytest.mark.reference_oracle
 
 
 def test_all_stemmers_match_reference_programs():

@@ -3,7 +3,6 @@ and the URLClassifyProcessor analog (pinned reference-verified samples
 + a fuzz subset vs the compiled solr URLClassifyProcessor —
 tools/fuzz_url.py, 1000+ urls byte-identical)."""
 
-import shutil
 import subprocess
 import sys
 
@@ -70,10 +69,7 @@ def test_url_classify_pinned(spark):
     assert (rows[4]["top_level_page"], rows[4]["landing_page"]) == (0, 0)
 
 
-@pytest.mark.skipif(
-    shutil.which("javac") is None or shutil.which("java") is None,
-    reason="no JDK for the reference oracle",
-)
+@pytest.mark.reference_oracle
 def test_fuzz_subset_matches_compiled_reference():
     proc = subprocess.run(
         [sys.executable, "tools/fuzz_url.py", "300"],
@@ -117,10 +113,7 @@ def test_url_path_hierarchy_matches_port(spark):
         assert got.get(i, []) == W.path_hierarchy(path), (u, path)
 
 
-@pytest.mark.skipif(
-    shutil.which("javac") is None or shutil.which("java") is None,
-    reason="no JDK for the reference oracle",
-)
+@pytest.mark.reference_oracle
 def test_path_fuzz_subset_matches_compiled_reference():
     proc = subprocess.run(
         [sys.executable, "tools/fuzz_path.py", "150"],
