@@ -30,6 +30,8 @@ verifies values, not just shapes.
 """
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 # two-round multiplicative mix on BIGINT arithmetic — identical in
@@ -101,6 +103,20 @@ def stratified_sample(docs: DataFrame, stratum_col: str = "lang",
     )
 
 
+# An unsharded pack_sequences whose input Catalyst estimates above this
+# many bytes warns: its running sum is one global window, which Spark
+# evaluates in a single task.
+PACK_GLOBAL_WINDOW_WARN_BYTES = 1 << 30
+
+
+def _size_estimate(df: DataFrame) -> int | None:
+    """The optimized plan's sizeInBytes (no Spark job runs); None when
+    Catalyst has no estimate (it reports spark.sql.defaultSizeInBytes)."""
+    est = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    unknown = df.sparkSession._jsparkSession.sessionState().conf().defaultSizeInBytes()
+    return None if est >= unknown else est
+
+
 def pack_sequences(docs: DataFrame, tokens_col: str = "n_tokens",
                    id_col: str = "doc_id", budget: int = 4096,
                    shard_col: str = None) -> DataFrame:
@@ -117,6 +133,15 @@ def pack_sequences(docs: DataFrame, tokens_col: str = "n_tokens",
         w = (Window.partitionBy(shard_col).orderBy(F.col(id_col).asc())
              .rowsBetween(Window.unboundedPreceding, -1))
     else:
+        est = _size_estimate(docs)
+        if est is not None and est > PACK_GLOBAL_WINDOW_WARN_BYTES:
+            warnings.warn(
+                f"pack_sequences without shard_col runs one global window "
+                f"(Window.orderBy({id_col!r}) with no partitionBy) over an "
+                f"input estimated at {est} bytes: every row moves to a single "
+                f"task. Pass shard_col to pack each shard independently.",
+                stacklevel=2,
+            )
         w = (Window.orderBy(F.col(id_col).asc())
              .rowsBetween(Window.unboundedPreceding, -1))
     prefix = F.coalesce(F.sum(tokens_col).over(w), F.lit(0))

@@ -131,6 +131,22 @@ def _factorize_sorted(terms: pd.Series):
     return codes.astype(np.int64), np.asarray(uniques)
 
 
+POSTINGS_COLUMNS = [
+    "term", "df", "ttf", "blocks", "positions", "skip_last", "skip_off",
+    "skip_pos_off", "skip_max_tf", "skip_max_norm",
+]
+
+
+def postings_frame(terms: np.ndarray, enc: dict) -> pd.DataFrame:
+    """Postings table rows from ``codec.encode_segment_postings`` output."""
+    return pd.DataFrame(
+        {"term": terms, **{c: enc[c] for c in ("df", "ttf", "blocks", "positions")},
+         # the per-block skip lists
+         **{c: [a.tolist() for a in enc[c]] for c in POSTINGS_COLUMNS[5:]}},
+        columns=POSTINGS_COLUMNS,
+    )
+
+
 def _build_segment_pdf(texts: pd.Series, with_positions: bool = True, analyzer: str = "standard") -> dict:
     """Pure-pandas segment build: postings table + norms + stats (vectorized)."""
     flat = tokenize_series(texts, analyzer=analyzer)
@@ -154,18 +170,6 @@ def _build_segment_pdf(texts: pd.Series, with_positions: bool = True, analyzer: 
     ds = doc_idx[order]
     ps = pos[order]
 
-    cols = [
-        "term",
-        "df",
-        "ttf",
-        "blocks",
-        "positions",
-        "skip_last",
-        "skip_off",
-        "skip_pos_off",
-        "skip_max_tf",
-        "skip_max_norm",
-    ]
     if len(ts):
         new_grp = np.empty(len(ts), dtype=bool)
         new_grp[0] = True
@@ -189,23 +193,9 @@ def _build_segment_pdf(texts: pd.Series, with_positions: bool = True, analyzer: 
             norm_bytes,
             ps if with_positions else None,
         )
-        postings = pd.DataFrame(
-            {
-                "term": term_uniques[g_term[t_starts]],
-                "df": enc["df"],
-                "ttf": enc["ttf"],
-                "blocks": enc["blocks"],
-                "positions": enc["positions"],
-                "skip_last": [a.tolist() for a in enc["skip_last"]],
-                "skip_off": [a.tolist() for a in enc["skip_off"]],
-                "skip_pos_off": [a.tolist() for a in enc["skip_pos_off"]],
-                "skip_max_tf": [a.tolist() for a in enc["skip_max_tf"]],
-                "skip_max_norm": [a.tolist() for a in enc["skip_max_norm"]],
-            },
-            columns=cols,
-        )
+        postings = postings_frame(term_uniques[g_term[t_starts]], enc)
     else:
-        postings = pd.DataFrame({c: [] for c in cols})
+        postings = pd.DataFrame({c: [] for c in POSTINGS_COLUMNS})
     return {
         "postings": postings,
         "norm_bytes": norm_bytes,

@@ -99,8 +99,8 @@ def check_segment(index_dir: str, seg: dict, sample_terms: int | None = None) ->
         _check((tfs >= 1).all(), f"{sid}/{t}: tf < 1")
         # skip/block-max agreement. Blocks are AT MOST BLOCK_SIZE entries:
         # interior tail blocks (< BLOCK_SIZE) are legal — they arise from
-        # salted chunk stitching and from the merge's bulk byte-copy path,
-        # which concatenates each source's blocks without re-packing.
+        # salted chunk stitching and in indexes merged before merges
+        # re-encoded their output (those concatenated each source's blocks).
         nblocks = len(skip_last)
         min_blocks = (df + codec.BLOCK_SIZE - 1) // codec.BLOCK_SIZE
         _check(nblocks >= min_blocks, f"{sid}/{t}: skip entry count")

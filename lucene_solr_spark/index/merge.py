@@ -16,18 +16,21 @@ Two deliberate departures, both scale-motivated:
     ranks, so merging adjacent url-range segments keeps every segment's doc
     range contiguous (local id = global - doc_base stays dense) and docIDs
     never need remapping — unlike Lucene, which renumbers per merge.
-  - execution: each merge group runs as ONE Spark task (a row in a
-    mapInPandas job) that streams the term-sorted postings files of its
-    inputs and re-encodes term-by-term with the vectorized codec. No
-    shuffle at all — this is exactly ConcurrentMergeScheduler's
-    "merges are background single-threaded jobs" model
-    (index/ConcurrentMergeScheduler.java:45-73), with Spark scheduling the
-    groups in parallel. For a pathological head term whose merged posting
-    list would not fit one task, the codec's chained-delta blocks allow a
-    salted (term, docid-range) split to be encoded independently and
-    stitched; the planner keeps groups <= maxMergeAtOnce so inputs stay
-    bounded (the mtree-merge fanout of
-    solr/contrib/map-reduce/.../MapReduceIndexerTool.java:322-358,795-810).
+  - execution: each merge group runs as ONE Spark task (one element of a
+    parallelize job). The task decodes every source's postings table whole
+    in one vectorized pass (codec.decode_segment_postings), shifts its
+    docids by the source's constant doc_base offset, puts all postings in
+    (term, doc) order with one stable sort and re-encodes them with the
+    build's encoder (codec.encode_segment_postings). A merged segment is
+    therefore byte-identical to a fresh build of the same docs, however
+    many merges produced it. The work is O(postings) numpy plus a fixed
+    Python cost per source and per field — not per (term, source) chunk,
+    which on a Zipf corpus holds only a few postings. No shuffle at all:
+    this is ConcurrentMergeScheduler's "merges are background
+    single-threaded jobs" model (index/ConcurrentMergeScheduler.java:45-73),
+    with Spark scheduling the groups in parallel; the planner keeps groups
+    <= maxMergeAtOnce so a task's inputs stay bounded (the mtree-merge
+    fanout of solr/contrib/map-reduce/.../MapReduceIndexerTool.java:322-358,795-810).
 
 `maybe_merge` loops plan->execute->commit until the tier budget is met
 (IndexWriter.maybeMerge, index/IndexWriter.java:445); each round publishes
@@ -47,7 +50,7 @@ from pyspark.sql import SparkSession
 
 from . import codec
 from . import manifest as manifest_mod
-from .build import write_segment_files
+from .build import FIELD_SEP, POSTINGS_COLUMNS, postings_frame, write_segment_files
 
 DEFAULT_MAX_MERGE_AT_ONCE = 10
 DEFAULT_SEGS_PER_TIER = 10.0
@@ -142,74 +145,67 @@ def plan_merges(
     return taken
 
 
-def _rebased_chunk(row, off: int, base: int) -> dict:
-    """Rebase one source postings row to merged doc space.
-
-    Adding a constant ``off`` to every docid changes only the FIRST delta
-    of the chained-delta stream, so only block 0 is re-encoded (its first
-    delta becomes relative to ``base``, the previous chunk's last merged
-    docid, -1 for the first chunk); every other block, the positions
-    stream (per-doc deltas, docid-independent) and the block-max metadata
-    are byte-identical copies."""
-    df = int(row.df)
-    skip_off = np.asarray(row.skip_off, dtype=np.int64)
-    skip_last = np.asarray(row.skip_last, dtype=np.int64)
-    if off == 0 and base == -1:
-        # first source chunk of the segment: nothing changes at all
-        return {
-            "df": df, "ttf": int(row.ttf), "blocks": row.blocks,
-            "positions": row.positions, "skip_last": skip_last,
-            "skip_off": skip_off,
-            "skip_pos_off": np.asarray(row.skip_pos_off, dtype=np.int64),
-            "skip_max_tf": np.asarray(row.skip_max_tf, dtype=np.int64),
-            "skip_max_norm": np.asarray(row.skip_max_norm, dtype=np.int64),
-        }
-    d0, t0 = codec.decode_blocks(
-        row.blocks, df, skip_off, skip_last, np.array([0])
-    )
-    d0 = d0 + off
-    prev = np.empty(len(d0), dtype=np.int64)
-    prev[0] = base
-    prev[1:] = d0[:-1]
-    deltas = d0 - prev
-    wd = codec._width_for(int(deltas.max()))
-    wt = codec._width_for(int(t0.max()))
-    blob0 = (
-        bytes([wd, wt])
-        + deltas.astype(codec._WIDTH_DTYPES[wd]).tobytes()
-        + t0.astype(codec._WIDTH_DTYPES[wt]).tobytes()
-    )
-    rest_start = int(skip_off[1]) if len(skip_off) > 1 else len(row.blocks)
-    new_off = np.empty_like(skip_off)
-    new_off[0] = 0
-    if len(skip_off) > 1:
-        new_off[1:] = skip_off[1:] - rest_start + len(blob0)
-    return {
-        "df": df,
-        "ttf": int(row.ttf),
-        "blocks": blob0 + row.blocks[rest_start:],
-        "positions": row.positions,
-        "skip_last": skip_last + off,
-        "skip_off": new_off,
-        "skip_pos_off": np.asarray(row.skip_pos_off, dtype=np.int64),
-        "skip_max_tf": np.asarray(row.skip_max_tf, dtype=np.int64),
-        "skip_max_norm": np.asarray(row.skip_max_norm, dtype=np.int64),
-    }
+def _encode_merged(
+    codes: np.ndarray, docids: np.ndarray, tfs: np.ndarray,
+    positions: np.ndarray | None, terms: np.ndarray, norms_by_field: dict,
+) -> pd.DataFrame:
+    """Re-encode (term, doc)-sorted merged postings with the build's encoder,
+    once per field: a namespaced term's block-max reads its field's norms."""
+    fields = list(norms_by_field)
+    term_field = np.array(
+        [fields.index(t.split(FIELD_SEP, 1)[0]) if FIELD_SEP in t else 0
+         for t in terms], dtype=np.int64)
+    counts = np.bincount(codes, minlength=len(terms))
+    frames, order = [], []
+    for fi, fname in enumerate(fields):
+        term_sel = np.flatnonzero(term_field == fi)
+        if not len(term_sel):
+            continue
+        post_sel = term_field[codes] == fi
+        t_ends = np.cumsum(counts[term_sel])
+        enc = codec.encode_segment_postings(
+            docids[post_sel], tfs[post_sel], t_ends - counts[term_sel], t_ends,
+            norms_by_field[fname],
+            None if positions is None else positions[np.repeat(post_sel, tfs)],
+        )
+        frames.append(postings_frame(terms[term_sel], enc))
+        order.append(term_sel)
+    if not frames:
+        return pd.DataFrame({c: [] for c in POSTINGS_COLUMNS})
+    if len(frames) == 1:
+        return frames[0]
+    # field runs interleave with text terms in term order (FIELD_SEP sorts
+    # low, but "ab" < "ab\x1f.." < "abc"): put every row back at its code
+    return pd.concat(frames, ignore_index=True).iloc[
+        np.argsort(np.concatenate(order))].reset_index(drop=True)
 
 
 def _merge_group(index_dir: str, seg_metas: list[dict], out_seg_id: str) -> dict:
-    """Single-task merge: K term-sorted postings tables -> one segment."""
+    """Single-task merge: K term-sorted postings tables -> one segment.
+
+    Decodes each source whole (codec.decode_segment_postings), rebases its
+    docids by a constant, orders every posting by (term, doc) with one
+    stable sort and re-encodes with the build's encoder, so the merged
+    segment is byte-identical to a fresh build of the same docs."""
     import pyarrow.parquet as pq
 
     t0 = time.time()
+    c0 = time.process_time()
     seg_metas = sorted(seg_metas, key=lambda s: s["doc_base"])
     new_base = seg_metas[0]["doc_base"]
-    tables, norms_list, urls_list, offs = [], [], [], []
+    norms_list, urls_list, decoded, term_parts = [], [], [], []
     extra_norm_parts: dict[str, list] = {}
     extra_sum_len: dict[str, int] = {}
+    bytes_read = 0
     for s in seg_metas:
         d = os.path.join(index_dir, s["path"])
-        tables.append(pq.read_table(os.path.join(d, "postings.parquet")).to_pandas())
+        ppath = os.path.join(d, "postings.parquet")
+        bytes_read += os.path.getsize(ppath)
+        pt = pq.read_table(ppath, columns=["term", "df", "blocks", "positions", "skip_off"])
+        dec = codec.decode_segment_postings(pt)
+        dec["docids"] += s["doc_base"] - new_base
+        decoded.append(dec)
+        term_parts.append(pt.column("term").to_numpy())
         nt = pq.read_table(os.path.join(d, "norms.parquet"))
         norms_list.append(np.frombuffer(nt["norms"][0].as_py(), dtype=np.uint8))
         seg_fields = (
@@ -228,7 +224,6 @@ def _merge_group(index_dir: str, seg_metas: list[dict], out_seg_id: str) -> dict
         urls_list.append(
             pq.read_table(os.path.join(d, "docmap.parquet"))["url"].to_numpy()
         )
-        offs.append(s["doc_base"] - new_base)
 
     merged_norms = np.concatenate(norms_list)
     merged_urls = np.concatenate(urls_list)
@@ -247,95 +242,31 @@ def _merge_group(index_dir: str, seg_metas: list[dict], out_seg_id: str) -> dict
         for f, parts in extra_norm_parts.items()
     }
 
-    from .build import FIELD_SEP
+    # Sources are adjacent doc ranges in doc order, so after rebasing, the
+    # concatenation is doc-ordered within every term; one stable sort by
+    # term code gives the (term, doc) order the encoder takes. Positions
+    # follow their posting: gather each posting's tf-long run in new order.
+    row_codes, terms = pd.factorize(np.concatenate(term_parts), sort=True)
+    post_codes = np.repeat(row_codes, np.concatenate([dec["df"] for dec in decoded]))
+    order = np.argsort(post_codes, kind="stable")
+    tfs_src = np.concatenate([dec["tfs"] for dec in decoded])
+    docids = np.concatenate([dec["docids"] for dec in decoded])[order]
+    tfs = tfs_src[order]
+    positions = None
+    pos_parts = [dec["positions"] for dec in decoded if len(dec["tfs"])]
+    if any(p is not None for p in pos_parts):
+        if any(p is None for p in pos_parts):
+            raise ValueError("cannot merge segments with and without positions")
+        src_start = np.cumsum(tfs_src) - tfs_src
+        new_start = np.cumsum(tfs) - tfs
+        gather = np.arange(int(tfs.sum())) + np.repeat(src_start[order] - new_start, tfs)
+        positions = np.concatenate(pos_parts)[gather]
 
-    def _norms_for_term(term: str) -> np.ndarray:
-        # namespaced multi-field terms re-encode against THEIR field's norms
-        if FIELD_SEP in term:
-            f = term.split(FIELD_SEP, 1)[0]
-            return merged_extra_norms[f]["norm_bytes"]
-        return merged_norms
-
-    # k-way term-sorted merge via BULK BYTE COPY (the SegmentMerger bulk
-    # merge path, index/SegmentMerger.java:112-150 — Lucene copies postings
-    # wholesale when no docid remapping is needed). Because merge groups are
-    # adjacent-by-doc-range, every source docid shifts by a CONSTANT
-    # (offs[src]); in the chained-delta encoding that changes ONLY the
-    # first delta of each row. So: re-encode block 0 of each (term, source)
-    # chunk against the previous chunk's last merged docid, byte-copy every
-    # other block, the whole positions stream, and the block-max metadata
-    # verbatim, then stitch chunks with the salted-chunk stitcher
-    # (codec.stitch_term_chunks). Cost is O(dictionary + one block per
-    # chunk), not O(postings) — this is what replaced the round-1
-    # decode-all/re-encode-all pass (VERDICT r1 §What's wrong #2).
-    cols = ["term", "df", "ttf", "blocks", "positions", "skip_off",
-            "skip_last", "skip_pos_off", "skip_max_tf", "skip_max_norm"]
-    frames = []
-    for i, t in enumerate(tables):
-        t = t[cols].copy()
-        t["src"] = i
-        frames.append(t)
-    allp = pd.concat(frames, ignore_index=True)
-    allp.sort_values(["term", "src"], kind="mergesort", inplace=True)
-
-    if len(allp):
-        terms_out: list = []
-        rows_out: list[dict] = []
-        cur_term = None
-        chunks: list[dict] = []
-        last_doc = -1
-        def _finish(term, chunks):
-            row = chunks[0] if len(chunks) == 1 else codec.stitch_term_chunks(chunks)
-            # fragmentation guard: repeated bulk-copy merges accumulate
-            # interior tail blocks (one per source chunk); once a term's
-            # block count exceeds 2x the compact minimum, decode + re-pack
-            # it (bounded work — only fragmented terms pay)
-            df = int(row["df"])
-            min_blocks = (df + codec.BLOCK_SIZE - 1) // codec.BLOCK_SIZE
-            if len(row["skip_last"]) > max(2 * min_blocks, 4):
-                so = np.asarray(row["skip_off"], np.int64)
-                sl = np.asarray(row["skip_last"], np.int64)
-                ids, tfs = codec.decode_blocks(row["blocks"], df, so, sl)
-                pos = codec.decode_positions_rows([row["positions"]], [tfs])
-                row = codec.encode_term_postings(
-                    ids, tfs, _norms_for_term(term), pos
-                )
-            terms_out.append(term)
-            rows_out.append(row)
-
-        for r in allp.itertuples(index=False):
-            if r.term != cur_term:
-                if chunks:
-                    _finish(cur_term, chunks)
-                cur_term = r.term
-                chunks = []
-                last_doc = -1
-            ch = _rebased_chunk(r, offs[r.src], last_doc)
-            last_doc = int(np.asarray(ch["skip_last"])[-1])
-            chunks.append(ch)
-        if chunks:
-            _finish(cur_term, chunks)
-        postings = pd.DataFrame(
-            {
-                "term": terms_out,
-                "df": [c["df"] for c in rows_out],
-                "ttf": [c["ttf"] for c in rows_out],
-                "blocks": [c["blocks"] for c in rows_out],
-                "positions": [c["positions"] for c in rows_out],
-                "skip_last": [np.asarray(c["skip_last"]).tolist() for c in rows_out],
-                "skip_off": [np.asarray(c["skip_off"]).tolist() for c in rows_out],
-                "skip_pos_off": [np.asarray(c["skip_pos_off"]).tolist() for c in rows_out],
-                "skip_max_tf": [np.asarray(c["skip_max_tf"]).tolist() for c in rows_out],
-                "skip_max_norm": [np.asarray(c["skip_max_norm"]).tolist() for c in rows_out],
-            }
-        )
-    else:
-        postings = pd.DataFrame(
-            columns=[
-                "term", "df", "ttf", "blocks", "positions", "skip_last",
-                "skip_off", "skip_pos_off", "skip_max_tf", "skip_max_norm",
-            ]
-        )
+    postings = _encode_merged(
+        post_codes[order], docids, tfs, positions, np.asarray(terms, dtype=object),
+        {"text": merged_norms,
+         **{f: e["norm_bytes"] for f, e in merged_extra_norms.items()}},
+    )
     built = {
         "postings": postings,
         "norm_bytes": merged_norms,
@@ -357,6 +288,9 @@ def _merge_group(index_dir: str, seg_metas: list[dict], out_seg_id: str) -> dict
             "merged_from": [s["segment_id"] for s in seg_metas],
             "doc_range": [int(new_base), int(new_base + len(merged_urls) - 1)],
             "wall_ms": int((time.time() - t0) * 1000),
+            "cpu_ms": int((time.process_time() - c0) * 1000),
+            "bytes_read": int(bytes_read),
+            "postings": int(len(docids)),
         },
     }
 

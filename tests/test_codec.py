@@ -57,9 +57,23 @@ def test_block_max_metadata():
         assert enc["skip_last"][bi] == docids[hi - 1]
 
 
-def test_decode_postings_rows_bulk_roundtrip():
-    """Vectorized many-row decoder == per-row decode_blocks, incl. mixed
-    widths, multi-block rows, and single-entry rows."""
+def postings_table(encs: list[dict]):
+    """The postings.parquet columns the segment decoder reads, one row per
+    per-term encode."""
+    import pyarrow as pa
+
+    return pa.table({
+        "df": pa.array([e["df"] for e in encs], pa.int64()),
+        "blocks": pa.array([e["blocks"] for e in encs], pa.binary()),
+        "positions": pa.array([e["positions"] for e in encs], pa.binary()),
+        "skip_off": pa.array([np.asarray(e["skip_off"]).tolist() for e in encs],
+                             pa.list_(pa.int64())),
+    })
+
+
+def test_decode_segment_postings_bulk_roundtrip():
+    """Whole-table decoder == the encoded rows, incl. mixed widths,
+    multi-block rows, single-entry rows and the empty table."""
     rng = np.random.default_rng(11)
     rows = []
     for df in (1, 5, 128, 129, 400, 1000):
@@ -73,23 +87,16 @@ def test_decode_postings_rows_bulk_roundtrip():
         enc = codec.encode_term_postings(docids, tfs, positions=pos_flat)
         rows.append((docids, tfs, pos, enc))
 
-    got_d, got_t = codec.decode_postings_rows(
-        [r[3]["blocks"] for r in rows],
-        np.array([r[3]["df"] for r in rows], np.int64),
-        [np.asarray(r[3]["skip_off"], np.int64) for r in rows],
-        [np.asarray(r[3]["skip_last"], np.int64) for r in rows],
-    )
-    exp_d = np.concatenate([r[0] for r in rows])
-    exp_t = np.concatenate([r[1] for r in rows])
-    np.testing.assert_array_equal(got_d, exp_d)
-    np.testing.assert_array_equal(got_t, exp_t)
-
-    dfs = np.array([r[3]["df"] for r in rows], np.int64)
-    got_pos = codec.decode_positions_rows(
-        [r[3]["positions"] for r in rows], np.split(got_t, np.cumsum(dfs)[:-1])
-    )
+    got = codec.decode_segment_postings(postings_table([r[3] for r in rows]))
+    np.testing.assert_array_equal(got["df"], [r[3]["df"] for r in rows])
+    np.testing.assert_array_equal(got["docids"], np.concatenate([r[0] for r in rows]))
+    np.testing.assert_array_equal(got["tfs"], np.concatenate([r[1] for r in rows]))
     exp_pos = np.concatenate([p for r in rows for p in r[2]])
-    np.testing.assert_array_equal(got_pos, exp_pos)
+    np.testing.assert_array_equal(got["positions"], exp_pos)
+
+    empty = codec.decode_segment_postings(postings_table([]))
+    assert len(empty["df"]) == len(empty["docids"]) == len(empty["tfs"]) == 0
+    assert empty["positions"] is None
 
 
 def test_varint_roundtrip_10_byte_values():

@@ -134,66 +134,71 @@ def test_analyzer_oracle_equivalence_property(n_docs, seed):
     np.testing.assert_array_equal(hy["pos"].to_numpy(), rg[2])
 
 
-@given(st.integers(2, 5), st.integers(0, 10_000))
-@settings(max_examples=30, deadline=None)
-def test_bulk_merge_rebase_stitch_property(n_sources, seed):
-    """Round-2 merge fast path: _rebased_chunk (block-0-only re-encode) +
-    stitch decodes identically to the concatenation of the source decodes,
-    for random per-source postings with positions."""
-    from types import SimpleNamespace
+_DELTA_MAX = {1: 255, 2: 65_535, 4: 1 << 20}
+_TF_MAX = {1: 255, 2: 65_535, 4: 65_536}
 
-    from lucene_solr_spark.index.merge import _rebased_chunk
+
+@given(
+    st.lists(
+        st.tuples(st.integers(1, 300), st.sampled_from([1, 2, 4]),
+                  st.sampled_from([1, 2, 4]), st.integers(1, 4)),
+        min_size=0, max_size=6,
+    ),
+    st.booleans(),
+    st.integers(0, 2**32),
+)
+@settings(max_examples=60, deadline=None)
+def test_segment_decoder_matches_per_row_property(rows, with_positions, seed):
+    """decode_segment_postings == per-row decode_blocks plus per-block
+    decode_positions_for_block, on random postings tables: doc and tf
+    widths 1/2/4, rows of 2-4 salted chunks (encode_term_chunk +
+    stitch_term_chunks, so interior tail blocks), positions-free tables
+    (``positions`` all b"") and the empty table."""
+    from tests.test_codec import postings_table
 
     rng = np.random.default_rng(seed)
-    offs = [0]
-    sources = []
-    for si in range(n_sources):
-        max_doc = int(rng.integers(5, 600))
-        df = int(rng.integers(1, max_doc + 1))
-        docids = np.sort(rng.choice(max_doc, df, replace=False)).astype(np.int64)
-        tfs = rng.integers(1, 6, df).astype(np.int64)
-        pos = np.concatenate([
-            np.sort(rng.choice(1000, t, replace=False)) for t in tfs
-        ])
-        enc = codec.encode_term_postings(docids, tfs, positions=pos)
-        sources.append((docids, tfs, pos, enc))
-        offs.append(offs[-1] + max_doc)
+    encs, exp_d, exp_t, exp_p = [], [], [], []
+    for df, wd, wt, n_chunks in rows:
+        docids = np.cumsum(rng.integers(1, _DELTA_MAX[wd] + 1, df)) - 1
+        tfs = rng.integers(1, 9, df)
+        tfs[rng.integers(df)] = _TF_MAX[wt]  # one block takes tf width wt
+        pos = np.cumsum(rng.integers(1, 300, int(tfs.sum()))) if with_positions else None
+        if n_chunks == 1 or df < n_chunks:
+            enc = codec.encode_term_postings(docids, tfs, positions=pos)
+        else:
+            cuts = np.sort(rng.choice(np.arange(1, df), n_chunks - 1, replace=False))
+            tf_ends = np.cumsum(tfs)
+            chunks = []
+            for lo, hi in zip(np.r_[0, cuts], np.r_[cuts, df]):
+                p0, p1 = tf_ends[lo] - tfs[lo], tf_ends[hi - 1]
+                chunks.append(codec.encode_term_chunk(
+                    docids[lo:hi], tfs[lo:hi], -1 if lo == 0 else int(docids[lo - 1]),
+                    positions=None if pos is None else pos[p0:p1],
+                ))
+            enc = codec.stitch_term_chunks(chunks)
+        encs.append(enc)
+        # the per-row reference decode, checked against the generated truth
+        so = np.asarray(enc["skip_off"], np.int64)
+        sl = np.asarray(enc["skip_last"], np.int64)
+        d, t = codec.decode_blocks(enc["blocks"], enc["df"], so, sl)
+        np.testing.assert_array_equal(d, docids)
+        np.testing.assert_array_equal(t, tfs)
+        exp_d.append(d)
+        exp_t.append(t)
+        if with_positions:
+            row_p = []
+            for bi in range(len(sl)):
+                bt = codec.decode_blocks(enc["blocks"], enc["df"], so, sl, np.array([bi]))[1]
+                row_p.extend(codec.decode_positions_for_block(
+                    enc["positions"], bt, enc["skip_pos_off"][bi]))
+            np.testing.assert_array_equal(np.concatenate(row_p), pos)
+            exp_p.extend(row_p)
 
-    chunks = []
-    last = -1
-    for si, (_d, _t, _p, enc) in enumerate(sources):
-        row = SimpleNamespace(
-            df=enc["df"], ttf=enc["ttf"], blocks=enc["blocks"],
-            positions=enc["positions"], skip_off=enc["skip_off"],
-            skip_last=enc["skip_last"], skip_pos_off=enc["skip_pos_off"],
-            skip_max_tf=enc["skip_max_tf"], skip_max_norm=enc["skip_max_norm"],
-        )
-        ch = _rebased_chunk(row, offs[si], last)
-        last = int(np.asarray(ch["skip_last"])[-1])
-        chunks.append(ch)
-    merged = codec.stitch_term_chunks(chunks)
-
-    got_d, got_t = codec.decode_blocks(
-        merged["blocks"], merged["df"],
-        np.asarray(merged["skip_off"], np.int64),
-        np.asarray(merged["skip_last"], np.int64),
-    )
-    exp_d = np.concatenate([d + offs[si] for si, (d, _t, _p, _e) in enumerate(sources)])
-    exp_t = np.concatenate([t for (_d, t, _p, _e) in sources])
-    np.testing.assert_array_equal(got_d, exp_d)
-    np.testing.assert_array_equal(got_t, exp_t)
-
-    # positions: decode per block through the stitched skip metadata
-    sp = np.asarray(merged["skip_pos_off"], np.int64)
-    so = np.asarray(merged["skip_off"], np.int64)
-    sl = np.asarray(merged["skip_last"], np.int64)
-    exp_pos = np.concatenate([p for (_d, _t, p, _e) in sources])
-    got_pos = []
-    lo = 0
-    for bi in range(len(sl)):
-        bd, bt = codec.decode_blocks(merged["blocks"], merged["df"], so, sl,
-                                     np.array([bi]))
-        pl = codec.decode_positions_for_block(merged["positions"], bt, sp[bi])
-        got_pos.extend(pl)
-        lo += len(bd)
-    np.testing.assert_array_equal(np.concatenate(got_pos), exp_pos)
+    got = codec.decode_segment_postings(postings_table(encs))
+    np.testing.assert_array_equal(got["df"], [e["df"] for e in encs])
+    np.testing.assert_array_equal(got["docids"], np.concatenate(exp_d) if exp_d else [])
+    np.testing.assert_array_equal(got["tfs"], np.concatenate(exp_t) if exp_t else [])
+    if with_positions and encs:
+        np.testing.assert_array_equal(got["positions"], np.concatenate(exp_p))
+    else:
+        assert got["positions"] is None

@@ -4,6 +4,7 @@ import os
 import shutil
 
 import numpy as np
+import pandas as pd
 
 from tests.conftest import CACHE
 
@@ -14,6 +15,38 @@ def _build(spark, pages, idx, nseg):
     shutil.rmtree(idx, ignore_errors=True)
     sdf = spark.createDataFrame(pages[["url", "text"]])
     return build_index(spark, sdf, idx, num_segments=nseg, build_id="m0")
+
+
+def assert_merged_segments_equal_builds(idx, pages, tmp_dir, extra_fields=()):
+    """Every merged segment's postings rows and norms equal a fresh
+    _build_segment_pdf over its docs' text (and extra fields) in docmap
+    order, and the index passes check_index."""
+    import pyarrow.parquet as pq
+
+    from lucene_solr_spark.index import manifest as mf
+    from lucene_solr_spark.index.build import _build_segment_pdf, write_segment_files
+    from lucene_solr_spark.index.check import check_index
+
+    check_index(idx)
+    by_url = pages.set_index("url")
+    merged = [s for s in mf.read_current(idx)["segments"]
+              if "merged_from" in s["lineage"]]
+    assert merged
+    for seg in merged:
+        d = os.path.join(idx, seg["path"])
+        urls = pq.read_table(os.path.join(d, "docmap.parquet"))["url"].to_numpy()
+        docs = by_url.loc[urls]
+        # same directory name -> same segment_id column
+        ref = os.path.join(tmp_dir, os.path.basename(d))
+        write_segment_files(
+            ref, _build_segment_pdf(pd.Series(docs["text"].to_numpy())), urls,
+            extra_built={f: _build_segment_pdf(pd.Series(docs[f].to_numpy()))
+                         for f in extra_fields} or None,
+        )
+        for f in ("postings.parquet", "norms.parquet"):
+            got = pq.read_table(os.path.join(d, f))
+            exp = pq.read_table(os.path.join(ref, f))
+            assert got.equals(exp), f"{seg['segment_id']}/{f} != fresh build"
 
 
 def test_plan_respects_budget_and_adjacency():
@@ -100,8 +133,7 @@ def test_force_merge_single_segment(spark, pages_small, oracle_small):
     _build(spark, pages_small, idx, 7)
     man = force_merge(spark, idx, max_segments=1)
     assert len(man["segments"]) == 1
-    # full structural validation of the bulk-copied + stitched segment,
-    # incl. the fragmentation guard (7 source chunks per head term)
+    # full structural validation of the merged segment (7 sources per term)
     from lucene_solr_spark.index.check import check_index
 
     check_index(idx)
@@ -226,3 +258,68 @@ def test_replicate_repairs_same_size_divergence(spark, pages_small, oracle_small
     r = replicate(src, dst)
     assert seg["segment_id"] in r["copied"]
     assert os.path.exists(f0) and not os.path.exists(f0 + ".x")
+
+
+def test_merge_of_merges_equals_one_shot_build(spark, pages_small, tmp_path):
+    """16 -> 4 -> 1: every merged segment equals a fresh build of its docs,
+    and the final segment equals a one-segment build_index of the corpus.
+    Merge lineage records worker cpu, source bytes read and postings."""
+    import pyarrow.parquet as pq
+
+    from lucene_solr_spark.index import manifest as mf
+    from lucene_solr_spark.index.merge import force_merge
+
+    pages = pages_small.iloc[:1600]
+    idx = os.path.join(CACHE, "idx_merge_16_4_1")
+    man16 = _build(spark, pages, idx, 16)
+    assert len(man16["segments"]) == 16
+    src_bytes = {s["segment_id"]: s["postings_bytes"] for s in man16["segments"]}
+
+    man4 = force_merge(spark, idx, max_segments=4)
+    assert len(man4["segments"]) == 4
+    assert_merged_segments_equal_builds(idx, pages, str(tmp_path / "r4"))
+    merged4 = [s for s in man4["segments"] if "merged_from" in s["lineage"]]
+    assert len(merged4) == 2  # 10 + 4 sources, two built segments untouched
+    for seg in merged4:
+        lin = seg["lineage"]
+        assert isinstance(lin["cpu_ms"], int) and lin["cpu_ms"] >= 0
+        assert lin["bytes_read"] == sum(src_bytes[s] for s in lin["merged_from"])
+        post = pq.read_table(os.path.join(idx, seg["path"], "postings.parquet"))
+        assert lin["postings"] == int(post["df"].to_numpy().sum()) > 0
+
+    man1 = force_merge(spark, idx, max_segments=1)
+    assert len(man1["segments"]) == 1
+    assert_merged_segments_equal_builds(idx, pages, str(tmp_path / "r1"))
+    assert man1["segments"][0]["lineage"]["bytes_read"] == sum(
+        s["postings_bytes"] for s in man4["segments"])
+
+    one = os.path.join(CACHE, "idx_merge_one_shot")
+    _build(spark, pages, one, 1)
+    seg_one = mf.read_current(one)["segments"][0]
+    for f in ("postings.parquet", "norms.parquet", "docmap.parquet"):
+        got, exp = (
+            pq.read_table(os.path.join(root, s["path"], f))
+            for root, s in ((idx, man1["segments"][0]), (one, seg_one))
+        )
+        if "segment_id" in got.column_names:  # the directory name differs
+            got, exp = got.drop_columns(["segment_id"]), exp.drop_columns(["segment_id"])
+        assert got.equals(exp), f
+
+
+def test_nrt_merge_equals_build(spark, pages_small, tmp_path):
+    """maybe_merge over NRT-appended segments (unsorted urls across the
+    merged range) equals a fresh build of the docs in docmap order."""
+    from lucene_solr_spark.index.merge import maybe_merge
+    from lucene_solr_spark.streaming.incremental import append_batch
+
+    idx = os.path.join(CACHE, "idx_merge_nrt")
+    _build(spark, pages_small.iloc[:900], idx, 3)
+    for b, (lo, hi) in enumerate([(900, 1200), (1200, 1500)], start=1):
+        append_batch(spark, spark.createDataFrame(pages_small.iloc[lo:hi][["url", "text"]]),
+                     idx, b, num_segments=2)
+    # a 1 MiB floor makes the seven ~100 KB segments equal-sized: budget 4
+    man = maybe_merge(spark, idx, max_merge_at_once=4, segs_per_tier=2.0,
+                      floor_bytes=1 << 20)
+    assert any(sid.startswith("nrt") for s in man["segments"]
+               for sid in s["lineage"].get("merged_from", []))
+    assert_merged_segments_equal_builds(idx, pages_small.iloc[:1500], str(tmp_path))

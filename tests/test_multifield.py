@@ -35,6 +35,22 @@ def mf_searcher(spark, mf_index):
     return SparkSearcher(spark, idx)
 
 
+def test_multifield_merge_equals_build(spark, mf_index, tmp_path):
+    """A force-merged copy of the multi-field index equals a fresh build
+    of the same docs, text and title field alike (per-field norms and
+    block-max bytes)."""
+    from lucene_solr_spark.index.merge import force_merge
+    from tests.test_merge import assert_merged_segments_equal_builds
+
+    idx, _, pages = mf_index
+    copy = os.path.join(CACHE, "test_index_multifield_merged")
+    shutil.rmtree(copy, ignore_errors=True)
+    shutil.copytree(idx, copy)
+    force_merge(spark, copy, max_segments=1)
+    assert_merged_segments_equal_builds(copy, pages, str(tmp_path),
+                                        extra_fields=("title",))
+
+
 def test_checkindex_multifield(mf_index):
     from lucene_solr_spark.index.check import check_index
 

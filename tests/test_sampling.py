@@ -93,6 +93,30 @@ def test_pack_sequences_sharded(spark):
     assert rows[(1, 1)] == 0 and rows[(1, 7)] == 1
 
 
+def test_pack_sequences_warns_on_large_global_window(spark, monkeypatch):
+    import warnings
+
+    import pytest
+
+    df = spark.range(0, 1000).withColumnRenamed("id", "doc_id") \
+        .withColumn("n_tokens", F.lit(7))
+    est = SMP._size_estimate(df)
+    assert est is not None and est > 0  # from the plan, no job
+    # rows shipped from Python have no estimate: never a warning
+    assert SMP._size_estimate(spark.createDataFrame([(1, 2)], "doc_id long, n long")) is None
+    monkeypatch.setattr(SMP, "PACK_GLOBAL_WINDOW_WARN_BYTES", est)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")  # at the threshold: silent
+        SMP.pack_sequences(df, budget=1000)
+    monkeypatch.setattr(SMP, "PACK_GLOBAL_WINDOW_WARN_BYTES", est - 1)
+    with pytest.warns(UserWarning, match="global window"):
+        SMP.pack_sequences(df, budget=1000)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")  # sharded: no global window
+        SMP.pack_sequences(df.withColumn("shard", F.col("doc_id") % 2),
+                           budget=1000, shard_col="shard")
+
+
 def test_redact_pii(spark):
     df = spark.createDataFrame(
         [("mail a.b+c@d.example.com ip 10.0.0.1 tel +1 555 123 4567 "
